@@ -25,7 +25,13 @@ batches) and explicitly-marked Pandas UDF paths.
 
 from __future__ import annotations
 
+from cae_polars_tools_spark import zipimport_guard
+
 __version__ = "0.1.0"
+
+# Spark Python workers import this package when they unpickle its code;
+# from then on their per-task import-cache reset skips unchanged archives.
+zipimport_guard.install()
 
 # Lazy attribute resolution (PEP 562) keeps `import cae_polars_tools_spark`
 # cheap and lets submodules be imported piecemeal.

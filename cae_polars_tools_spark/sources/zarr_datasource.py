@@ -41,8 +41,8 @@ from pyspark.sql.datasource import (
 from cae_polars_tools_spark.sources.zarr_reader import (
     DEFAULT_CHUNK_SIZE,
     ScanPlan,
-    partition_ranges,
     plan_scan,
+    plan_windows,
     schema_for_plan,
     window_to_arrow,
 )
@@ -124,9 +124,7 @@ class _ZarrReaderCore(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         return [
             ZarrWindowPartition(s, e)
-            for s, e in partition_ranges(
-                self.plan.total_rows, self.chunk_size, self.plan.row_align
-            )
+            for s, e in plan_windows(self.plan, self.chunk_size)
         ]
 
     def read(self, partition: ZarrWindowPartition) -> Iterator:
@@ -346,24 +344,17 @@ class ZarrStreamReader(DataSourceStreamReader):
                 f"({plan.sel_shape[0]} < {e_len}) — appends must be "
                 "monotone"
             )
-        inner = 1
-        for d in self._inner_shape:
-            inner *= int(d)
-        s_row, e_row = s_len * inner, e_len * inner
-        if e_row <= s_row:
+        if e_len <= s_len or plan.total_rows == 0:
             return []
-        # windows align in ABSOLUTE row coordinates (multiples of
-        # row_align from row 0), then clip to the slab: a slab start
-        # that is not itself chunk-aligned must not shift every
-        # boundary off the chunk grid, or each boundary chunk would be
-        # fetched and decoded by two partitions
+        # windows follow the store's absolute dim-0 chunk grid, so a
+        # slab start that is not itself chunk-aligned does not shift
+        # every boundary off the grid (each boundary chunk would then
+        # be fetched and decoded by two partitions)
         light = _lightened_plan(plan)
-        out = []
-        for a, b in partition_ranges(e_row, self._chunk_size, plan.row_align):
-            lo, hi = max(a, s_row), min(b, e_row)
-            if lo < hi:
-                out.append(ZarrStreamPartition(light, lo, hi))
-        return out
+        return [
+            ZarrStreamPartition(light, a, b)
+            for a, b in plan_windows(plan, self._chunk_size, s_len, e_len)
+        ]
 
     def read(self, partition: ZarrStreamPartition):
         yield window_to_arrow(partition.plan, partition.start, partition.end)

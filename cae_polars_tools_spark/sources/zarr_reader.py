@@ -54,7 +54,8 @@ def _encode_sel(sel: Any, n: int) -> EncodedSel:
     if isinstance(sel, slice):
         a, b, c = sel.indices(n)
         return ("slice", a, b, c)
-    return [int(i) for i in sel]
+    # negative positions resolved here so plan_windows sees the chunk grid
+    return [int(i) + n if i < 0 else int(i) for i in sel]
 
 
 def _decode_sel(e: EncodedSel):
@@ -105,11 +106,11 @@ class ScanPlan:
     sel_coords: dict[str, Any]
     value_dtype: str  # numpy dtype string of the array
     coord_dtypes: dict[str, str]  # numpy dtype string per surviving dim
-    # Partition windows are rounded up to a multiple of this row count
-    # so partition boundaries coincide with zarr chunk boundaries along
-    # dim 0 — without it, adjacent partitions both fetch+decompress the
-    # storage chunk that straddles their boundary.
-    row_align: int = 1
+    # Storage chunk length along the first surviving dim: partition
+    # windows are cut only where the selection crosses this grid
+    # (plan_windows) — otherwise adjacent partitions both fetch and
+    # decompress the storage chunk that straddles their boundary.
+    dim0_chunk: int = 1
     # Fingerprint of the group metadata AT PLAN TIME. Part of the
     # executor-side group-cache key: long-lived reused Python workers
     # would otherwise serve a stale cached group after in-place store
@@ -121,6 +122,24 @@ class ScanPlan:
     @property
     def total_rows(self) -> int:
         return int(np.prod(self.sel_shape)) if self.sel_shape else 1
+
+    @property
+    def row_align(self) -> int:
+        """Rows per dim-0 storage chunk when the dim-0 selection is a
+        unit-step slice, whole dim-0 positions otherwise: the alignment
+        for :func:`partition_ranges` windows counted from row 0. Chunk-
+        exact only for a slice that starts on the chunk grid; scans use
+        :func:`plan_windows`, which aligns any selection."""
+        if not self.sel_shape:
+            return 1
+        inner = int(np.prod(self.sel_shape[1:]))
+        e0 = self._dim0_selection()
+        if isinstance(e0, tuple) and e0[3] == 1:
+            return inner * self.dim0_chunk
+        return inner
+
+    def _dim0_selection(self) -> EncodedSel:
+        return self.selection[self.dims_in.index(self.sel_dims[0])]
 
     def coord_values(self, dim: str) -> np.ndarray | None:
         """Selected coordinate values for a surviving dim as held on the
@@ -216,17 +235,7 @@ def plan_scan(
             coords_out[dim] = np.asarray(cv)
             coord_dtypes[dim] = str(cv.dtype)
 
-    # Align partition windows to whole dim-0 positions (`inner` rows),
-    # and to whole dim-0 *storage chunks* when the dim-0 selection is a
-    # unit-step slice (positions map to contiguous chunk runs).
-    row_align = 1
-    if sel_shape:
-        inner = int(np.prod(sel_shape[1:])) if len(sel_shape) > 1 else 1
-        row_align = inner
-        first_in_idx = dims.index(sel_dims[0])
-        e0 = encoded[first_in_idx]
-        if isinstance(e0, tuple) and e0[3] == 1:
-            row_align = inner * int(arr.chunks[first_in_idx])
+    dim0_chunk = int(arr.chunks[dims.index(sel_dims[0])]) if sel_dims else 1
 
     return ScanPlan(
         store_path=store.store_path,
@@ -241,7 +250,7 @@ def plan_scan(
         sel_coords=coords_out,
         value_dtype=str(arr.dtype),
         coord_dtypes=coord_dtypes,
-        row_align=row_align,
+        dim0_chunk=dim0_chunk,
         meta_etag=group_meta_etag(group),
     )
 
@@ -274,16 +283,11 @@ def refine_plan(plan: ScanPlan, masks: dict[str, np.ndarray]) -> ScanPlan:
             sel_coords[dim] = np.arange(sel_shape[dim], dtype=np.int64)[mask]
         sel_by_dim[dim] = [int(i) for i in kept]
         sel_shape[dim] = len(kept)
-    new_shape = tuple(sel_shape[d] for d in plan.sel_dims)
-    # Refined dim-0 selections are position lists (no longer chunk-run
-    # slices), so fall back to whole-dim-0-position window alignment.
-    inner = int(np.prod(new_shape[1:])) if len(new_shape) > 1 else 1
     return dataclasses.replace(
         plan,
         selection=[sel_by_dim[d] for d in plan.dims_in],
-        sel_shape=new_shape,
+        sel_shape=tuple(sel_shape[d] for d in plan.sel_dims),
         sel_coords=sel_coords,
-        row_align=inner if new_shape else 1,
     )
 
 
@@ -306,16 +310,80 @@ def schema_for_plan(plan: ScanPlan):
 def partition_ranges(
     total_rows: int, chunk_size: int = DEFAULT_CHUNK_SIZE, align: int = 1
 ) -> list[tuple[int, int]]:
-    """Split [0, total_rows) into row windows: one Spark partition each.
-    Window size is chunk_size, grown to cap the partition count, then
-    rounded up to a multiple of ``align`` so partition boundaries land
-    on zarr chunk boundaries (no chunk is fetched by two partitions)."""
+    """Split [0, total_rows) into equal row windows: the window size is
+    chunk_size, grown to cap the count at ``MAX_PARTITIONS``, then
+    rounded up to a multiple of ``align``. Plan-free; scans use
+    :func:`plan_windows`."""
     if total_rows <= 0:
         return [(0, 0)]
-    window = max(int(chunk_size), math.ceil(total_rows / MAX_PARTITIONS), 1)
+    window = _window_target(total_rows, chunk_size)
     if align > 1:
         window = math.ceil(window / align) * align
     return [(s, min(s + window, total_rows)) for s in range(0, total_rows, window)]
+
+
+def _window_target(rows: int, chunk_size: int) -> int:
+    """Minimum rows per window: chunk_size, grown past MAX_PARTITIONS."""
+    return max(int(chunk_size), math.ceil(rows / MAX_PARTITIONS), 1)
+
+
+def _chunk_group_end(e: EncodedSel, chunk: int):
+    """For a dim-0 selection, a function q -> the first selected position
+    after q whose storage chunk (absolute grid of length ``chunk``)
+    differs from position q's."""
+    if isinstance(e, tuple):
+        a, c = e[1], e[3]
+
+        def slice_end(q: int) -> int:
+            k = (a + q * c) // chunk  # storage chunk of position q
+            if c > 0:  # first position at or past chunk k + 1's start
+                return -(-((k + 1) * chunk - a) // c)
+            return -(-(a - k * chunk + 1) // -c)  # first one below chunk k
+
+        return slice_end
+    cid = np.asarray(e, dtype=np.int64) // chunk
+    bounds = np.flatnonzero(cid[1:] != cid[:-1]) + 1
+    n = len(cid)
+
+    def end(q: int) -> int:
+        i = int(np.searchsorted(bounds, q, side="right"))
+        return int(bounds[i]) if i < len(bounds) else n
+
+    return end
+
+
+def plan_windows(
+    plan: ScanPlan,
+    chunk_size: int,
+    first: int = 0,
+    stop: int | None = None,
+) -> list[tuple[int, int]]:
+    """Row windows, one Spark partition each, over the selected dim-0
+    positions [first, stop) (default: all of them).
+
+    A window is a run of whole groups of consecutive positions that
+    share a dim-0 storage chunk on the store's absolute chunk grid,
+    grown until it holds at least chunk_size rows (more past
+    ``MAX_PARTITIONS`` windows). So no chunk is fetched by two windows,
+    whatever the selection's offset or step, and a full scan from
+    position 0 gets the windows of
+    ``partition_ranges(total_rows, chunk_size, row_align)``."""
+    if not plan.sel_shape:
+        return [(0, 1)]  # 0-D selection: one scalar row
+    stop = plan.sel_shape[0] if stop is None else stop
+    inner = int(np.prod(plan.sel_shape[1:]))
+    rows = (stop - first) * inner
+    if rows <= 0:
+        return [(0, 0)]
+    need = math.ceil(_window_target(rows, chunk_size) / inner)  # positions
+    group_end = _chunk_group_end(plan._dim0_selection(), plan.dim0_chunk)
+    out = []
+    s = first
+    while s < stop:
+        e = min(group_end(min(s + need, stop) - 1), stop)
+        out.append((s * inner, e * inner))
+        s = e
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -477,7 +545,7 @@ def distributed_scan(spark, plan: ScanPlan, schema, chunk_size: int):
     """One Spark partition per row window; partitions read + expand
     independently (this IS the reference's streaming conversion mapped
     onto Spark's execution model)."""
-    ranges = partition_ranges(plan.total_rows, chunk_size, plan.row_align)
+    ranges = plan_windows(plan, chunk_size)
     n = len(ranges)
 
     def gen(batch_iter) -> Iterator:
